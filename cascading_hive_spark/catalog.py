@@ -133,8 +133,9 @@ def publish_partition(
         raise ValueError(f"path {path!r} contains a single quote")
     df.write.format(fmt).mode("overwrite").save(path)
     spec_sql = ", ".join(f"`{k}` = '{v}'" for k, v in partition_spec.items())
-    existing = {tuple(sorted(p.items())) for p in partitions(spark, name)}
-    if tuple(sorted((k, str(v)) for k, v in partition_spec.items())) in existing:
+    # one catalog lookup of the target spec, not a listing of every
+    # partition of the table
+    if spark.sql(f"SHOW PARTITIONS {name} PARTITION ({spec_sql})").collect():
         spark.sql(f"ALTER TABLE {name} PARTITION ({spec_sql}) SET LOCATION '{path}'")
     else:
         spark.sql(f"ALTER TABLE {name} ADD PARTITION ({spec_sql}) LOCATION '{path}'")
@@ -291,9 +292,13 @@ def partitions(spark: SparkSession, name: str, filter: str | None = None) -> lis
        so the driver's Python side only ever receives matching specs.
 
     Values are URL-unescaped DataFrame-side (Hive escapes ':', ' ',
-    '%', ... in partition paths) so they round-trip against
-    publish_partition's membership check (ADVICE r2)."""
-    part_cols = [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+    '%', ... in partition paths) so they round-trip against the
+    values callers put in partition specs (ADVICE r2)."""
+    # read off the JVM catalog: PySpark's spark.catalog.listColumns
+    # iterates with toLocalIterator, which runs Spark jobs for what is
+    # a metadata lookup
+    cols = spark._jsparkSession.catalog().listColumns(name).collectAsList()
+    part_cols = [c.name() for c in cols if c.isPartition()]
     clause = ""
     pushed: dict[str, str] | None = None
     if filter:

@@ -11,6 +11,12 @@ local[N] now and a 1000-executor cluster later:
 - shuffle.partitions sized to the machine, not the 200 default.
 - Arrow enabled for the Pandas-UDF slow path.
 - UTC session timezone so timestamp semantics are stable across hosts.
+- partition-discovery listing in at most one task per core: Spark
+  lists more than 32 paths (a partitioned table's directories) in a
+  Spark job with one task per path up to 10,000 — on local[N] that is
+  hundreds of scheduling-only tasks on a cold scan. Capping the job
+  at defaultParallelism keeps the listing parallel (and distributed
+  on a cluster, where defaultParallelism is the executor core count).
 """
 
 from __future__ import annotations
@@ -18,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 
 def get_session(
@@ -62,6 +70,17 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    return _tune_listing(spark)
+
+
+def _tune_listing(spark: SparkSession) -> SparkSession:
+    """Cap the partition-discovery listing job at one task per core,
+    unless the session already sets the cap (extra_conf, the
+    submitting driver's own conf)."""
+    if spark.conf.get(_LISTING_PARALLELISM, None) is None:
+        spark.conf.set(
+            _LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism)
+        )
     return spark
 
 
@@ -71,4 +90,4 @@ def tune_for_queries(spark: SparkSession) -> SparkSession:
     mutable after start."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark
+    return _tune_listing(spark)

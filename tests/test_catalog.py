@@ -259,6 +259,29 @@ def test_partition_metadata_filter_pushdown(spark, sf_dir):
         C.drop_table(spark, "t_meta_push")
 
 
+def test_pushed_equality_partitions_run_no_spark_job(spark, sf_dir, spark_jobs):
+    """The pushed-equality path is pure catalog metadata: reading the
+    partition columns and the matching spec launches no Spark job
+    (PySpark's ``spark.catalog.listColumns`` alone ran several)."""
+    C.drop_table(spark, "t_meta_jobs")
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        "o_year", F.year("o_orderdate").cast("string")
+    )
+    C.create_table(spark, "t_meta_jobs", orders, partition_by=["o_year"])
+    try:
+        years = sorted({p["o_year"] for p in C.partitions(spark, "t_meta_jobs")})
+        # the counter sees jobs when there are some
+        _, tasks = spark_jobs(lambda: spark.range(8, numPartitions=2).count())
+        assert tasks
+        got, tasks = spark_jobs(
+            lambda: C.partitions(spark, "t_meta_jobs", f"o_year = '{years[0]}'")
+        )
+        assert got == [{"o_year": years[0]}]
+        assert tasks == [], tasks
+    finally:
+        C.drop_table(spark, "t_meta_jobs")
+
+
 def test_pushed_equality_agrees_with_expression_fallback(spark):
     """The coercion contract made executable (ADVICE r11): a QUOTED
     equality filter must return identical specs whether it takes the

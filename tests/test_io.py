@@ -230,3 +230,35 @@ def test_observe_runtime_metrics(spark, sf_dir):
     n = li.filter(F.col("l_quantity") > 0).count()
     assert obs.get["rows_seen"] >= n
     assert obs.get["null_qty"] == 0
+
+
+def test_many_path_listing_runs_one_task_per_core(spark, tmp_path, spark_jobs):
+    """Reading more paths than Spark's parallel-listing threshold (32)
+    lists them in a Spark job; the session caps that job at one task
+    per core instead of one task per path."""
+    df = spark.range(400).withColumn("d", F.col("id") % 40)
+    IO.write_table(df, str(tmp_path / "t"), fmt="orc", partition_by=["d"])
+    paths = [str(tmp_path / "t" / f"d={d}") for d in range(40)]
+    back, tasks = spark_jobs(lambda: IO.read_table(spark, paths, fmt="orc"))
+    assert tasks, "40 paths should be listed by a Spark job"
+    assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    assert back.count() == 400
+
+
+def test_supplied_session_gets_listing_cap_unless_set(spark):
+    """``tune_for_queries`` (sessions an external driver supplies)
+    applies the same per-core listing cap, and keeps a cap the
+    session already sets."""
+    from cascading_hive_spark.session import tune_for_queries
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        tune_for_queries(spark)
+        assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+        spark.conf.set(key, "3")
+        tune_for_queries(spark)
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, old)
